@@ -553,13 +553,16 @@ def pq_encode(
     return corpus.withColumn(out_col, _enc(F.col(vec_col)))
 
 
-#: injected-``encoded`` frames already validated this session (weak
-#: identity set — session_cached hands every caller the SAME frame
-#: object, so the one-row probe below runs once per session, not per
-#: search).  Guards the r12 ADVICE hole: a caller injecting a table
-#: encoded with DIFFERENT codebooks/subspaces silently returned wrong
-#: neighbors instead of erroring.
-_ENCODED_VALIDATED: "weakref.WeakSet" = None  # type: ignore[assignment]
+#: injected-``encoded`` frames already validated this session, each
+#: mapped to the ``(code_col, subspaces, codebook_size)`` tuples it
+#: passed for (weak identity keys — session_cached hands every caller
+#: the SAME frame object, so the one-row probe below runs once per
+#: session and parameter set, not per search).  Guards the r12 ADVICE
+#: hole: a caller injecting a table encoded with DIFFERENT
+#: codebooks/subspaces silently returned wrong neighbors instead of
+#: erroring — and a frame that passed for one parameter set must be
+#: probed again before it serves another.
+_ENCODED_VALIDATED: "weakref.WeakKeyDictionary" = None  # type: ignore[assignment]
 
 
 def _validate_encoded(
@@ -580,15 +583,16 @@ def _validate_encoded(
     import weakref  # noqa: PLC0415
 
     if _ENCODED_VALIDATED is None:
-        _ENCODED_VALIDATED = weakref.WeakSet()
+        _ENCODED_VALIDATED = weakref.WeakKeyDictionary()
     missing = [c for c in required_cols if c not in encoded.columns]
     if missing:
         raise ValueError(
             f"injected encoded table is missing columns {missing}; "
             f"expected {list(required_cols)}"
         )
+    params = (code_col, subspaces, codebook_size)
     try:
-        if encoded in _ENCODED_VALIDATED:
+        if params in _ENCODED_VALIDATED.get(encoded, ()):
             return
     except TypeError:  # unhashable/unweakrefable frame: probe each call
         pass
@@ -609,7 +613,7 @@ def _validate_encoded(
                 "with a different codebook_size"
             )
     try:
-        _ENCODED_VALIDATED.add(encoded)
+        _ENCODED_VALIDATED.setdefault(encoded, set()).add(params)
     except TypeError:
         pass
 

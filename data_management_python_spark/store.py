@@ -97,6 +97,118 @@ from data_management_python_spark.operators.upsert import merge_upsert
 #: maxPartitionBytes-shaped choice.
 DEFAULT_TARGET_BUCKET_BYTES = 256 * 1024 * 1024
 
+# -- driver-side port of Spark's XxHash64 (xxhash64 expression, seed 42) ----
+#
+# The bucket of a row is pmod(xxhash64(key cols), n_buckets).  Hashing a
+# literal key through Spark costs a whole job (a parallelized local frame
+# and a Python worker); this port gives the same ids on the driver for
+# the key types the store buckets on.  Arithmetic is mod 2**64, words
+# are little-endian, exactly as Spark's XXH64 reads them.
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_XXHASH_SEED = 42
+_INT_RANGE = {"int": (-(1 << 31), 1 << 31), "bigint": (-(1 << 63), 1 << 63)}
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _fmix(h: int) -> int:
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _xxh64_word(h: int, k: int) -> int:
+    h ^= _rotl(k * _P2 & _M64, 31) * _P1 & _M64
+    return (_rotl(h, 27) * _P1 + _P4) & _M64
+
+
+def _xxh64_half(h: int, k: int) -> int:
+    h ^= (k & 0xFFFFFFFF) * _P1 & _M64
+    return (_rotl(h, 23) * _P2 + _P3) & _M64
+
+
+def _xxh64_bytes(b: bytes, seed: int) -> int:
+    """Spark's ``XXH64.hashUnsafeBytes``."""
+    n, i = len(b), 0
+    if n >= 32:
+        v = [
+            (seed + _P1 + _P2) & _M64,
+            (seed + _P2) & _M64,
+            seed,
+            (seed - _P1) & _M64,
+        ]
+        while i <= n - 32:
+            for j in range(4):
+                k = int.from_bytes(b[i + 8 * j:i + 8 * j + 8], "little")
+                v[j] = _rotl((v[j] + k * _P2) & _M64, 31) * _P1 & _M64
+            i += 32
+        h = (
+            _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        ) & _M64
+        for x in v:
+            h ^= _rotl(x * _P2 & _M64, 31) * _P1 & _M64
+            h = (h * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h = _xxh64_word(h, int.from_bytes(b[i:i + 8], "little"))
+        i += 8
+    if i + 4 <= n:
+        h = _xxh64_half(h, int.from_bytes(b[i:i + 4], "little"))
+        i += 4
+    for byte in b[i:]:
+        h ^= byte * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    return _fmix(h)
+
+
+def _xxh64_value(v: Any, dtype: str, seed: int) -> int:
+    if dtype == "string":
+        return _xxh64_bytes(v.encode("utf-8"), seed)
+    if dtype == "int":  # Spark's XXH64.hashInt
+        return _fmix(_xxh64_half((seed + _P5 + 4) & _M64, v))
+    return _fmix(_xxh64_word((seed + _P5 + 8) & _M64, v & _M64))  # hashLong
+
+
+def driver_hashable(v: Any, dtype: str) -> bool:
+    """True when ``v`` is a Python literal that :func:`bucket_of_row`
+    hashes exactly as Spark hashes a ``dtype`` column holding it: a
+    ``str`` for ``string``, an in-range ``int`` (not ``bool``) for
+    ``int``/``bigint``."""
+    if dtype == "string":
+        return isinstance(v, str)
+    lo_hi = _INT_RANGE.get(dtype)
+    return (
+        lo_hi is not None
+        and type(v) is int
+        and lo_hi[0] <= v < lo_hi[1]
+    )
+
+
+def bucket_of_row(values, dtypes, n_buckets: int) -> int:
+    """``pmod(xxhash64(*cols), n_buckets)`` of one row, on the driver.
+    ``values``/``dtypes`` pair up column by column (``string``, ``int``
+    or ``bigint``); a None component is skipped, as Spark skips NULL
+    inputs when it chains the hash across columns."""
+    h = _XXHASH_SEED
+    for v, dtype in zip(values, dtypes):
+        if v is not None:
+            h = _xxh64_value(v, dtype, h)
+    if h >> 63:
+        h -= 1 << 64
+    return h % n_buckets  # Python's % on a positive modulus is pmod
+
 
 class ConcurrentWriterError(RuntimeError):
     """Another writer holds (or abandoned) this store's commit lock."""
@@ -2992,24 +3104,17 @@ class TableStore:
                 F.col("__n"),
             )
             if self._has_data(name):
-                existing = None
                 if part is not None and set(part[0]) <= set(cols):
                     keys, n_buckets = part
                     touched = self._touched_buckets(batch, keys, n_buckets)
-                    raw = self._read_raw(name)
-                    if self.BUCKET_COL in raw.columns:
-                        spec_l = self._layout(name)
-                        buckets = (
-                            self._expand_split_buckets(spec_l, touched)
-                            if spec_l is not None
-                            else touched
-                        )
-                        existing = raw.filter(
-                            F.col(self.BUCKET_COL).isin(
-                                [int(b) for b in buckets]
-                            )
-                        ).drop(self.BUCKET_COL)
-                if existing is None:
+                    spec_l = self._layout(name)
+                    existing = self._read_buckets(
+                        name,
+                        self._expand_split_buckets(spec_l, touched)
+                        if spec_l is not None
+                        else touched,
+                    )
+                else:
                     existing = self.table(name)
                 clash = batch.join(
                     existing.na.drop(subset=cols).select(*cols),
@@ -3059,6 +3164,34 @@ class TableStore:
             # resolve to their journaled pre-txn pointer, so none of
             # the rename-mode strand/fence checks below apply
             return self._obj_read_raw(name)
+        view = self._read_guard(name)
+        if view is not None:
+            return view
+        p = self._path(name)
+        if self._has_data(name):
+            if self._schema_override(name) is not None:
+                sch = self._evolved_struct(name)
+                if sch is not None:
+                    # explicit evolved schema: files predating an ADD
+                    # COLUMN read it as NULL, DROPped columns are not
+                    # projected, and mixed-schema dirs read
+                    # deterministically (no footer sampling); the kb=
+                    # partition column is appended by partition
+                    # discovery as usual
+                    return self.spark.read.schema(sch).parquet(p)
+            return self.spark.read.parquet(p)
+        sch = self._evolved_struct(name)
+        if sch is not None:
+            return self.spark.createDataFrame([], sch)
+        raise KeyError(f"unknown table {name!r}")
+
+    def _read_guard(self, name: str) -> DataFrame | None:
+        """The rename-mode checks every read of ``name`` runs first.
+        Returns the last-committed snapshot view while another
+        writer's open transaction holds only appends to the table,
+        else None (read the live tree).  Raises while that writer
+        holds a swap of the table, and on any stranded sibling or swap
+        temp dir a crashed mutation left behind."""
         p = self._path(name)
         if self.fs.exists(self._txn_path("pending")):
             pend = self._read_journal("pending")
@@ -3092,7 +3225,7 @@ class TableStore:
                         or self._txn.token != pend["token"]
                     )
                 ):
-                    return self._read_raw(name)
+                    return self._read_guard(name)
                 raise RuntimeError(
                     f"table {name!r} is being rewritten by transaction "
                     f"{pend['token'][:8]} (pid {pend.get('pid')}); "
@@ -3155,22 +3288,47 @@ class TableStore:
                     f"{p} (it RESTORES a live-absent __precompact) "
                     "before reading"
                 )
-        if self._has_data(name):
-            if self._schema_override(name) is not None:
-                sch = self._evolved_struct(name)
-                if sch is not None:
-                    # explicit evolved schema: files predating an ADD
-                    # COLUMN read it as NULL, DROPped columns are not
-                    # projected, and mixed-schema dirs read
-                    # deterministically (no footer sampling); the kb=
-                    # partition column is appended by partition
-                    # discovery as usual
-                    return self.spark.read.schema(sch).parquet(p)
-            return self.spark.read.parquet(p)
-        sch = self._evolved_struct(name)
-        if sch is not None:
-            return self.spark.createDataFrame([], sch)
-        raise KeyError(f"unknown table {name!r}")
+        return None
+
+    def _read_buckets(self, name: str, buckets: list[int]) -> DataFrame:
+        """Logical rows (``kb`` dropped) of the given buckets of a
+        bucketed table — the one bucket-scoped read every keyed verb
+        and partition-scoped mutation goes through.
+
+        Runs :meth:`_read_guard` first, so a pruned read gets the same
+        snapshot view, fence and stranded-sibling refusals as a full
+        one.  Then it opens only the ``kb=<b>`` dirs that exist, with
+        ``basePath`` (partition discovery over the touched dirs only)
+        and the declared struct (no footer job to infer a schema).  No
+        touched dir on disk reads as the declared empty frame."""
+        if self.manifest_commits:
+            view = self._read_raw(name)
+        else:
+            view = self._read_guard(name)
+        if view is None:
+            p = self._path(name)
+            dirs = [
+                d
+                for d in (
+                    os.path.join(p, f"{self.BUCKET_COL}={int(b)}")
+                    for b in buckets
+                )
+                if self.fs.exists(d)
+            ]
+            sch = self._evolved_struct(name)
+            if not dirs:
+                if sch is None:
+                    raise KeyError(f"unknown table {name!r}")
+                return self.spark.createDataFrame([], sch)
+            reader = self.spark.read.option("basePath", p)
+            if sch is not None:
+                reader = reader.schema(sch)
+            return reader.parquet(*dirs).drop(self.BUCKET_COL)
+        if self.BUCKET_COL not in view.columns:
+            return view  # dataless: the declared empty frame
+        return view.filter(
+            F.col(self.BUCKET_COL).isin([int(b) for b in buckets])
+        ).drop(self.BUCKET_COL)
 
     def _declared_dtypes(self, name: str) -> list[tuple[str, str]] | None:
         """(column, spark dtype) pairs from the CATALOG's declared
@@ -3184,6 +3342,12 @@ class TableStore:
         if sch is None:
             return None
         return [(f.name, f.dataType.simpleString()) for f in sch.fields]
+
+    def _column_dtypes(self, name: str) -> dict[str, str]:
+        """Column -> spark dtype: the declared ones, or (an undeclared
+        table) the ones a read of its files resolves."""
+        decl = self._declared_dtypes(name)
+        return dict(decl if decl is not None else self.table(name).dtypes)
 
     def _snapshot_view(self, name: str) -> DataFrame | None:
         """Last-COMMITTED view of ``name`` while another writer's
@@ -4015,15 +4179,7 @@ class TableStore:
                     )
                 ).drop(self.BUCKET_COL)
         if current is None:
-            raw = self._read_raw(name)
-            if self.BUCKET_COL in raw.columns:
-                current = raw.filter(
-                    F.col(self.BUCKET_COL).isin(
-                        [int(b) for b in touched]
-                    )
-                ).drop(self.BUCKET_COL)
-            else:  # partitioned but dataless: declared logical schema
-                current = raw
+            current = self._read_buckets(name, touched)
         out = self._cluster_by_bucket(
             rewrite(current).withColumn(
                 self.BUCKET_COL, self._bucket_expr(keys, n_buckets)
@@ -4423,13 +4579,8 @@ class TableStore:
             # 256 MB bucket.  Unlike the old union+dropDuplicates
             # rewrite, an existing row can never be arbitrarily
             # replaced by its incoming twin (attribute ids survive).
-            raw = self._read_raw(attr_table)
-            existing = (
-                raw.filter(
-                    F.col(self.BUCKET_COL).isin([int(b) for b in touched])
-                ).select(*dedup_keys)
-                if self.BUCKET_COL in raw.columns
-                else raw.select(*dedup_keys)
+            existing = self._read_buckets(attr_table, touched).select(
+                *dedup_keys
             )
             # NULL-SAFE anti-join (shared helper): a plain equality
             # join never matches a NULL parent id / value, so a
@@ -4456,13 +4607,20 @@ class TableStore:
         n_buckets: int,
         filters: dict[str, Any],
     ) -> list[int]:
-        """Bucket ids the literal key values in ``filters`` hash to.
-        Values are cast to the TABLE's column types (``dtypes``, taken
-        from the frame the caller is already reading — no extra tree
-        walk) before hashing — xxhash64 is type-sensitive, so a Python
-        int probed against an int-typed column would otherwise hash
-        into the wrong bucket.  O(#literal combinations) driver rows;
-        one tiny local job."""
+        """Bucket ids the literal key values in ``filters`` hash to,
+        hashed as values of the TABLE's column types (``dtypes``, the
+        catalog's declared ones — no read of the table) — xxhash64 is
+        type-sensitive, so a Python int probed against an int-typed
+        column must hash as an int, not a bigint.
+
+        Literals that already are the column's type (``str`` for
+        ``string``, an in-range ``int`` for ``int``/``bigint``) are
+        hashed on the driver by the XxHash64 port (:func:`bucket_of_row`)
+        — no Spark job.  Any other literal (a ``"5"`` probed against a
+        bigint column, a float, a date key) keeps the Spark probe: the
+        combinations go through a local frame, are CAST to the column
+        types and hashed by ``xxhash64`` itself, one small job.
+        O(#literal combinations) driver rows either way."""
         import itertools  # noqa: PLC0415
 
         lists = [
@@ -4470,6 +4628,15 @@ class TableStore:
             for v in (filters[k] for k in keys)
         ]
         combos = [tuple(c) for c in itertools.product(*lists)]
+        kinds = [dtypes[k] for k in keys]
+        if all(
+            driver_hashable(v, kind)
+            for vs, kind in zip(lists, kinds)
+            for v in vs
+        ):
+            return sorted(
+                {bucket_of_row(c, kinds, n_buckets) for c in combos}
+            )
         frame = self.spark.createDataFrame(combos, schema=list(keys)).select(
             *[F.col(k).cast(dtypes[k]).alias(k) for k in keys]
         )
@@ -4488,14 +4655,17 @@ class TableStore:
         """Equality/IN fetch (fetch_records_by_column /
         _by_multiple_column, baseadaptor.py:450-504).
 
-        BUCKET-PRUNED on a partitioned table when the filters pin every
+        BUCKET-SCOPED on a partitioned table when the filters pin every
         bucket key to non-empty literals: the key values are hashed
-        driver-side into their ``kb=`` buckets and the scan carries a
-        partition filter — a single-parent fetch against a 100-TB EAV
-        table reads ONE bucket, not the table (the read-side twin of
-        the partition-scoped MERGE).  The table tree is opened ONCE —
-        at 2^20 bucket dirs a redundant driver-side listing would cost
-        more than the one-bucket scan the pruning buys."""
+        into their ``kb=`` buckets and the scan opens only those dirs
+        (:meth:`_read_buckets`, which runs every read guard first) — a
+        single-parent fetch against a 100-TB EAV table lists and reads
+        ONE bucket, not the table (the read-side twin of the
+        partition-scoped MERGE).  The hash is typed by the catalog's
+        declared key types (no read of the table to learn them) and,
+        for literals of the column's own type, computed by the
+        driver-side XxHash64 port, so a keyed fetch is ONE Spark job:
+        the scan that collects it."""
         spec = self._layout(name)  # ONE snapshot serves count + expand
         if spec is not None:
             keys = list(spec["keys"])
@@ -4532,20 +4702,15 @@ class TableStore:
                                 F.col(self.BUCKET_COL).isin(buckets)
                             ).drop(self.BUCKET_COL)
                             return filter_by_columns(pruned, **filters)
-                raw = self._read_raw(name)
-                if self.BUCKET_COL in raw.columns:  # has bucketed data
-                    dtypes = dict(raw.drop(self.BUCKET_COL).dtypes)
-                    buckets = self._expand_split_buckets(
-                        spec,
-                        self._buckets_of_values(
-                            dtypes, keys, n_buckets, filters
-                        ),
-                    )
-                    pruned = raw.filter(
-                        F.col(self.BUCKET_COL).isin(buckets)
-                    ).drop(self.BUCKET_COL)
-                    return filter_by_columns(pruned, **filters)
-                return filter_by_columns(raw, **filters)
+                buckets = self._expand_split_buckets(
+                    spec,
+                    self._buckets_of_values(
+                        self._column_dtypes(name), keys, n_buckets, filters
+                    ),
+                )
+                return filter_by_columns(
+                    self._read_buckets(name, buckets), **filters
+                )
         return filter_by_columns(self.table(name), **filters)
 
     def exists(self, name: str, **filters: Any) -> bool:
@@ -4756,9 +4921,12 @@ class TableStore:
         (get_attributes_by_dbid, baseadaptor.py:507-539).
 
         On a bucketed attribute table the scan is PARTITION-PRUNED to
-        the buckets the requested parents hash into (one extra
-        O(n_buckets) driver job over ``parent_ids``) — a keyed read
-        touches |parents|/n_buckets of the table instead of all of it.
+        the buckets the requested parents hash into: one extra
+        O(n_buckets) driver job over ``parent_ids`` (cast to the
+        declared key type — no read of the table to learn it), then a
+        scan of only those ``kb=`` dirs (:meth:`_read_buckets`) — a
+        keyed read touches |parents|/n_buckets of the table instead of
+        all of it.
         Pass ``prune_buckets=False`` when ``parent_ids`` is itself a
         huge frame whose extra pass costs more than the full scan it
         saves (reads stay correct either way)."""
@@ -4794,25 +4962,17 @@ class TableStore:
                         eav = pruned.filter(
                             F.col(self.BUCKET_COL).isin(buckets)
                         ).drop(self.BUCKET_COL)
-        if eav is None and (
-            prune_buckets
-            and spec is not None
-            and list(spec["keys"]) == [key]
-        ):
-            raw = self._read_raw(name)  # opened once; reused below
-            if self.BUCKET_COL in raw.columns:
-                dtypes = dict(raw.drop(self.BUCKET_COL).dtypes)
+            if eav is None:
+                dtypes = self._column_dtypes(name)
                 keyed = parent_ids.select(
                     F.col(key).cast(dtypes[key]).alias(key)
                 )
-                buckets = self._expand_split_buckets(
-                    spec, self._touched_buckets(keyed, [key], n_buckets)
+                eav = self._read_buckets(
+                    name,
+                    self._expand_split_buckets(
+                        spec, self._touched_buckets(keyed, [key], n_buckets)
+                    ),
                 )
-                eav = raw.filter(
-                    F.col(self.BUCKET_COL).isin(buckets)
-                ).drop(self.BUCKET_COL)
-            else:  # partitioned but dataless: declared schema, no kb
-                eav = raw
         if eav is None:
             eav = self.table(name)
         scoped = semi_join(eav, parent_ids, on=key)

@@ -329,6 +329,24 @@ def test_pq_ann_injected_encoded_validated(spark):
         )
 
 
+def test_validate_encoded_memo_keyed_on_pq_parameters(spark):
+    """The validated-frame memo must not let a frame that passed for
+    one (code_col, subspaces, codebook_size) skip the probe for
+    another: the same frame object is re-probed under new parameters."""
+    import pytest
+
+    enc = spark.createDataFrame(
+        [(1, [3, 3]), (2, [0, 1])], "neighbor_id long, pq_codes array<int>"
+    )
+    cols = ("neighbor_id", "pq_codes")
+    similarity._validate_encoded(enc, "pq_codes", 2, 4, cols)
+    similarity._validate_encoded(enc, "pq_codes", 2, 4, cols)  # memo hit
+    with pytest.raises(ValueError, match="different PQ parameters"):
+        similarity._validate_encoded(enc, "pq_codes", 4, 4, cols)
+    with pytest.raises(ValueError, match="different codebook_size"):
+        similarity._validate_encoded(enc, "pq_codes", 2, 2, cols)
+
+
 def test_global_prefix_sum_matches_local_scan(spark):
     from data_management_python_spark.llmdata.packing import global_prefix_sum
 

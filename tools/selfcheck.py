@@ -11,6 +11,7 @@ Usage: python tools/selfcheck.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import sys
@@ -19,6 +20,12 @@ import time
 import duckdb
 
 sys.path.insert(0, "/root/repo")
+
+
+TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings",
+)
 
 
 def canon(v):
@@ -85,6 +92,30 @@ def type_mismatches(spark_dtypes, duck_cols, duck_types):
     return bad
 
 
+def register_views(con, sf_dir: str, tables=TABLES) -> list[str]:
+    """One DuckDB view per corpus table; returns the tables skipped.
+
+    Partial corpora (the docs-only MEGA replicas) ship only the tables
+    their query families read, so a table with no parquet data is
+    skipped with a notice naming it — queries touching it would fail
+    on both engines anyway.  Any other DuckDB error (a corrupt or
+    half-written file) propagates instead of silently degrading the
+    oracle."""
+    skipped = []
+    for t in tables:
+        # driver testdata ships single files; Spark-written stress
+        # corpora (tools/scale_stress.py) are DIRECTORIES of parts
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path = f"{path}/*.parquet"
+        if not glob.glob(path):
+            print(f"skip table {t}: no parquet data at {path}")
+            skipped.append(t)
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return skipped
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -111,24 +142,7 @@ def main():
 
         spark = get_spark(app_name="selfcheck")
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        # driver testdata ships single files; Spark-written stress
-        # corpora (tools/scale_stress.py) are DIRECTORIES of parts
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        try:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-        except duckdb.Error:
-            # partial corpora (the docs-only MEGA replicas) ship only
-            # the tables their query families read; queries touching a
-            # missing table would fail on BOTH engines anyway
-            pass
+    register_views(con, sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
