@@ -62,6 +62,7 @@ import threading
 import time
 import uuid
 import warnings
+from collections import Counter
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -208,6 +209,85 @@ def bucket_of_row(values, dtypes, n_buckets: int) -> int:
     if h >> 63:
         h -= 1 << 64
     return h % n_buckets  # Python's % on a positive modulus is pmod
+
+
+def _driver_buckets(rows, dtypes, n_buckets: int) -> list[int] | None:
+    """Sorted distinct :func:`bucket_of_row` ids of ``rows`` (key
+    tuples typed column by column as ``dtypes``), or None when some
+    non-NULL value is not :func:`driver_hashable` — the caller then
+    hashes through Spark's own ``xxhash64``."""
+    if not all(
+        v is None or driver_hashable(v, kind)
+        for row in rows
+        for v, kind in zip(row, dtypes)
+    ):
+        return None
+    return sorted({bucket_of_row(r, dtypes, n_buckets) for r in rows})
+
+
+# -- client batches -----------------------------------------------------------
+#
+# The write verbs take small driver-built frames (a status update, a
+# two-lane append).  ``spark.createDataFrame(list)`` plans them as a
+# LogicalRDD fed by Python workers, and every check that looks at the
+# batch (enum domains, touched buckets, duplicate merge keys, the
+# merge's broadcast sides) re-runs that Python pass as a Spark job.
+# A LocalRelation holds the same rows in the driver: Catalyst folds
+# Project/Filter over it and collects it without a job.
+
+
+def _plan_leaves(df: DataFrame) -> list:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def _node_kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _driver_resident(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s optimized plan is a
+    LocalRelation: its rows already sit in the driver, so collecting
+    (a projection of) it costs no shuffle — and no job at all when
+    Catalyst folds the plan into one LocalRelation."""
+    return all(_node_kind(n) == "LocalRelation" for n in _plan_leaves(df))
+
+
+def _parallelized(rdd) -> bool:
+    """True when every root of ``rdd``'s lineage is a
+    ParallelCollectionRDD (``sc.parallelize``/``createDataFrame`` of a
+    Python list): data that went through driver memory."""
+    deps = rdd.dependencies()
+    if deps.size() == 0:
+        return _node_kind(rdd) == "ParallelCollectionRDD"
+    return all(_parallelized(deps.apply(i).rdd()) for i in range(deps.size()))
+
+
+def _local_batch(df: DataFrame) -> DataFrame:
+    """``df`` as a LocalRelation when it is driver-built data: every
+    leaf of its optimized plan is a non-streaming LogicalRDD over
+    parallelized collections.  Such a frame is collected once on the
+    JVM side (one job) and rebuilt as a LocalRelation with the same
+    schema, so every later check and join over it runs in the driver.
+    Anything else — a frame already folded into a LocalRelation, file
+    scans, checkpointed or cached frames, streaming micro-batches,
+    RDDs over files, plans mixing sources — is returned unchanged and
+    keeps the distributed path.  Decided from the plan alone: no job
+    runs unless the frame is localized."""
+    leaves = _plan_leaves(df)
+    if not leaves or not all(
+        _node_kind(n) == "LogicalRDD"
+        and not n.isStreaming()
+        and _parallelized(n.rdd())
+        for n in leaves
+    ):
+        return df
+    jdf = df._jdf
+    rows = jdf.collectAsList()
+    spark = df.sparkSession
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(rows, jdf.schema()), spark
+    )
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -4130,12 +4210,28 @@ class TableStore:
     def _touched_buckets(
         self, frame: DataFrame, keys: list[str], n_buckets: int
     ) -> list[int]:
-        """Distinct bucket ids a key frame lands in — O(n_buckets)
-        driver rows, the only thing MERGE ever collects.  collect_set
-        (partial per-partition sets, one single-task final combine)
-        instead of distinct+collect: same answer, one reduce task
-        instead of a full shuffle fan-out, and bucket ids are never
-        NULL (xxhash64 is null-tolerant and non-null)."""
+        """Distinct bucket ids a key frame lands in, hashed with the
+        frame's own column types — callers cast the keys to the
+        table's declared types first (xxhash64 is type-sensitive).
+
+        A driver-resident frame (a client batch after
+        :func:`_local_batch`) has its key columns collected — no job
+        when the plan folds into a LocalRelation — and hashed on the
+        driver by the same XxHash64 port keyed reads use.  Any other
+        frame, or a key type the port does not cover, runs one
+        collect_set job (partial per-partition sets, one single-task
+        final combine) instead of distinct+collect: same answer, one
+        reduce task instead of a full shuffle fan-out, and bucket ids
+        are never NULL (xxhash64 is null-tolerant and non-null)."""
+        if _driver_resident(frame):
+            dtypes = dict(frame.dtypes)
+            got = _driver_buckets(
+                frame.select(*keys).collect(),
+                [dtypes[k] for k in keys],
+                n_buckets,
+            )
+            if got is not None:
+                return got
         got = frame.select(
             F.collect_set(
                 self._bucket_expr(keys, n_buckets)
@@ -4331,7 +4427,14 @@ class TableStore:
         physical types across files.  Serialized against concurrent
         writers; inside a :meth:`transaction` the append is staged and
         journaled, so the whole transaction commits or rolls back as
-        one."""
+        one.
+
+        A driver-built ``data`` (``createDataFrame`` of a list) is
+        evaluated once, on entry, into a LocalRelation
+        (:func:`_local_batch`): the enum check then runs without a
+        job and the write reads the batch from the driver, not through
+        Python workers again."""
+        data = _local_batch(data)
         with self._write_guard():
             self._check_mutable(name)
             if validate and name in CORE_SCHEMAS:
@@ -4429,7 +4532,14 @@ class TableStore:
         ``maybe_rebucket`` maintenance runs AFTER commit — it is not
         part of the logical transaction and its own incremental-split
         protocol is independently crash-safe.
+
+        A driver-built ``data`` is evaluated once, on entry
+        (:func:`_local_batch`); the main and attribute halves then
+        derive from that LocalRelation — the nested appends never
+        re-run the client's Python rows, and the attribute side's
+        touched buckets are hashed on the driver.
         """
+        data = _local_batch(data)
         with self.transaction():
             attr_table = self._store_with_attributes_txn(
                 name, data, key_column, fk, validate
@@ -4628,15 +4738,9 @@ class TableStore:
             for v in (filters[k] for k in keys)
         ]
         combos = [tuple(c) for c in itertools.product(*lists)]
-        kinds = [dtypes[k] for k in keys]
-        if all(
-            driver_hashable(v, kind)
-            for vs, kind in zip(lists, kinds)
-            for v in vs
-        ):
-            return sorted(
-                {bucket_of_row(c, kinds, n_buckets) for c in combos}
-            )
+        got = _driver_buckets(combos, [dtypes[k] for k in keys], n_buckets)
+        if got is not None:
+            return got
         frame = self.spark.createDataFrame(combos, schema=list(keys)).select(
             *[F.col(k).cast(dtypes[k]).alias(k) for k in keys]
         )
@@ -4741,7 +4845,15 @@ class TableStore:
         STANDALONE call opens its own single-op transaction: a crash
         halfway through the bucket swaps rolls back atomically
         (old-path torn multi-bucket states are gone), and concurrent
-        readers are fenced for exactly the swap window."""
+        readers are fenced for exactly the swap window.
+
+        A driver-built ``updates`` is evaluated once, on entry, into a
+        LocalRelation (:func:`_local_batch`): the enum check, the
+        touched-bucket hash (driver-side, on the keys cast to the
+        table's declared types) and the duplicate-key check then run
+        without Spark jobs, and the merge write reads the batch from
+        the driver."""
+        updates = _local_batch(updates)
         with self.transaction():
             self._upsert_locked(name, updates, on, update_columns)
 
@@ -4805,19 +4917,52 @@ class TableStore:
                     f"partition-scoped upsert on {name} cannot update "
                     f"bucket key columns {sorted(set(update_columns) & set(keys))}"
                 )
+            # the batch takes the table's column types before anything
+            # hashes it: an int key against a bigint bucket column
+            # would otherwise hash to another bucket and the update
+            # would land in no touched bucket — silently lost
+            updates = self._as_declared(name, updates)
             self._enforce_merge_constraints(name, updates, on)
             touched = self._touched_buckets(updates, keys, n_buckets)
             if not touched:
                 return
+            check = self._needs_unique_check(updates, on)
             self._merge_partitioned(
                 name,
                 touched,
-                lambda cur: merge_upsert(cur, updates, on, update_columns),
+                lambda cur: merge_upsert(
+                    cur, updates, on, update_columns, validate_unique=check
+                ),
             )
             return
         self._enforce_merge_constraints(name, updates, on)
-        merged = merge_upsert(self.table(name), updates, on, update_columns)
+        merged = merge_upsert(
+            self.table(name), updates, on, update_columns,
+            validate_unique=self._needs_unique_check(updates, on),
+        )
         self._swap(name, merged)
+
+    def _as_declared(self, name: str, df: DataFrame) -> DataFrame:
+        """``df`` with every column the table declares cast to its
+        declared type (other columns untouched, order kept)."""
+        dtypes = self._column_dtypes(name)
+        return df.select(
+            *[
+                F.col(c).cast(dtypes[c]).alias(c) if c in dtypes else F.col(c)
+                for c in df.columns
+            ]
+        )
+
+    @staticmethod
+    def _needs_unique_check(updates: DataFrame, on: list[str]) -> bool:
+        """Whether merge_upsert must run its duplicate-merge-key check
+        in Spark.  A driver-resident batch is counted on the driver
+        instead; only a batch that does repeat a key goes on to the
+        Spark check, which raises merge_upsert's own error."""
+        if not _driver_resident(updates):
+            return True
+        seen = Counter(tuple(r) for r in updates.select(*on).collect())
+        return any(n > 1 for n in seen.values())
 
     def overwrite(
         self, name: str, data: DataFrame, validate: bool = True
@@ -4883,7 +5028,10 @@ class TableStore:
         """Key-addressed delete (M7 building block).  Partition-scoped
         on a bucketed table, same contract as :meth:`upsert` —
         including transaction participation and the standalone
-        single-op transaction (atomic across every touched bucket)."""
+        single-op transaction (atomic across every touched bucket).
+        A driver-built ``keys`` frame is evaluated once, on entry
+        (:func:`_local_batch`)."""
+        keys = _local_batch(keys)
         with self.transaction():
             self._enforce_delete_restrict(name, keys, on)
             self._delete_where_locked(name, keys, on)
@@ -4899,6 +5047,7 @@ class TableStore:
                     f"partition-scoped delete on {name} needs bucket "
                     f"keys {bkeys} to be a subset of the delete keys {on}"
                 )
+            keys = self._as_declared(name, keys)  # hash as upsert does
             touched = self._touched_buckets(keys, bkeys, n_buckets)
             if not touched:
                 return
@@ -4921,15 +5070,19 @@ class TableStore:
         (get_attributes_by_dbid, baseadaptor.py:507-539).
 
         On a bucketed attribute table the scan is PARTITION-PRUNED to
-        the buckets the requested parents hash into: one extra
-        O(n_buckets) driver job over ``parent_ids`` (cast to the
-        declared key type — no read of the table to learn it), then a
-        scan of only those ``kb=`` dirs (:meth:`_read_buckets`) — a
-        keyed read touches |parents|/n_buckets of the table instead of
-        all of it.
+        the buckets the requested parents hash into (``parent_ids``
+        cast to the declared key type — no read of the table to learn
+        it), then a scan of only those ``kb=`` dirs
+        (:meth:`_read_buckets`) — a keyed read touches
+        |parents|/n_buckets of the table instead of all of it.  A
+        driver-built ``parent_ids`` is evaluated once, on entry
+        (:func:`_local_batch`), and its ids are hashed on the driver;
+        any other frame pays one extra O(n_buckets) collect_set job
+        over ``parent_ids`` (:meth:`_touched_buckets`).
         Pass ``prune_buckets=False`` when ``parent_ids`` is itself a
         huge frame whose extra pass costs more than the full scan it
         saves (reads stay correct either way)."""
+        parent_ids = _local_batch(parent_ids)
         name = f"{parent}_attribute"
         key = f"{parent}_id"
         spec = self._layout(name)  # ONE snapshot serves count + expand

@@ -44,3 +44,40 @@ def test_plan_hashes_sidecar_is_fresh():
         " `python tools/selfcheck.py` run) so the driver's plan-change"
         " staleness ordering sees the edit"
     )
+
+
+def test_src_digest_sees_helper_module_edits(monkeypatch):
+    """An edit to a helper module alone — no query fn touched — flips
+    the src digest of exactly the queries whose defining module
+    imports that helper: ``llmdata/text.py`` for the llmdata queries,
+    ``store.py`` for the store-substrate relational queries, neither
+    for the TPC-H ones."""
+    import inspect
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    try:
+        from plan_hashes import src_digest
+    finally:
+        sys.path.pop(0)
+    from data_management_python_spark import store
+    from data_management_python_spark.llmdata import text
+    from data_management_python_spark.plans import collect_queries
+
+    queries = collect_queries()
+    before = {n: src_digest(q) for n, q in queries.items()}
+    real = inspect.getsource
+    edited = (text, store)
+
+    def getsource(obj):
+        src = real(obj)
+        return src + "\n# edited\n" if any(obj is m for m in edited) else src
+
+    monkeypatch.setattr(inspect, "getsource", getsource)
+    flipped = {n for n, q in queries.items() if src_digest(q) != before[n]}
+    assert "d_exact_dedup" in flipped  # llmdata.queries imports text
+    assert "m_partitioned_merge" in flipped  # plans.relational: store
+    assert "q4_priority_exists" not in flipped  # plans.tpch: neither
+    assert {
+        n for n in flipped
+        if queries[n].fn.__module__.endswith((".tpch", ".graph"))
+    } == set()

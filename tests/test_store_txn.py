@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from data_management_python_spark.store import (
     ConcurrentWriterError,
     TableStore,
+    _local_batch,
 )
 
 PROJECT_SCHEMA = (
@@ -494,6 +495,16 @@ def test_upsert_crash_mid_bucket_swap_rolls_back(spark, root):
     """Process death halfway through an in-txn upsert's per-bucket
     swap loop (some buckets retracted, some untouched): recovery
     restores the byte-exact pre-state."""
+    _upsert_crash_mid_bucket_swap(spark, root, localized=False)
+
+
+def test_upsert_crash_mid_bucket_swap_rolls_back_local_batch(spark, root):
+    """The same crash after the batch was turned into a LocalRelation,
+    as ``upsert`` does on entry with a driver-built frame."""
+    _upsert_crash_mid_bucket_swap(spark, root, localized=True)
+
+
+def _upsert_crash_mid_bucket_swap(spark, root, localized):
     store = TableStore(spark, root)
     store.store_records("project", _projects(spark, range(1, 9)))
     store.enable_partitioning("project", ["project_id"], 4)
@@ -502,6 +513,8 @@ def test_upsert_crash_mid_bucket_swap_rolls_back(spark, root):
     upd = _projects(spark, range(1, 9)).withColumn(
         "status", F.lit("FINISHED")
     )
+    if localized:
+        upd = _local_batch(upd)
     store._acquire_lock(explicit=True)
     # run the journaled merge but crash after TWO bucket renames
     orig_replace = os.replace

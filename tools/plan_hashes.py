@@ -37,8 +37,12 @@ full rotation cycle.
 
 from __future__ import annotations
 
+import ast
+import functools
 import glob
 import hashlib
+import importlib.util
+import inspect
 import json
 import os
 import re
@@ -91,28 +95,67 @@ def normalize_plan(plan: str, sf_dir: str) -> str:
     return plan
 
 
-def src_digest(q) -> str:
-    """Spark-free digest of a query's oracle + fn source — the cheap
-    component of the full digest.  tests/test_plan_hashes_fresh.py
-    recomputes it per query in milliseconds to fail CI when a query
-    was edited without re-running this tool (a stale sidecar silently
-    disables the plan-changed-jumps-the-window ordering).  Library-code
-    changes that alter a plan WITHOUT touching the query fn are beyond
-    this tripwire — those are what the per-round full run catches."""
-    import inspect
+PACKAGE = "data_management_python_spark"
 
+
+def _is_module(name: str) -> bool:
+    try:
+        return importlib.util.find_spec(name) is not None
+    except ImportError:  # parent is a plain module, not a package
+        return False
+
+
+@functools.lru_cache(maxsize=None)
+def _package_imports(module_name: str) -> tuple[str, ...]:
+    """Names of the ``data_management_python_spark`` modules that
+    ``module_name`` imports anywhere in its source — at top level or
+    inside a function — sorted, the module itself excluded.  ``from
+    pkg import name`` counts ``pkg.name`` when that is a module (``from
+    ...llmdata import text``) and ``pkg`` otherwise."""
+    tree = ast.parse(inspect.getsource(importlib.import_module(module_name)))
+    found: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            found.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            if not node.module.startswith(PACKAGE):
+                continue
+            for a in node.names:
+                sub = f"{node.module}.{a.name}"
+                found.add(sub if _is_module(sub) else node.module)
+    return tuple(sorted(
+        n for n in found
+        if (n == PACKAGE or n.startswith(PACKAGE + "."))
+        and n != module_name
+    ))
+
+
+def src_digest(q) -> str:
+    """Spark-free digest of a query's oracle, its fn source and the
+    source of every ``data_management_python_spark`` module the fn's
+    defining module imports — the cheap component of the full digest.
+    tests/test_plan_hashes_fresh.py recomputes it per query to fail CI
+    when a query, or a helper module it imports (``text.py``,
+    ``store.py``), was edited without re-running this tool (a stale
+    sidecar silently disables the plan-changed-jumps-the-window
+    ordering).  Only direct imports count: an edit two imports away
+    is left to the per-round full run, which digests the plan."""
     try:
         src = inspect.getsource(q.fn)
     except (OSError, TypeError):
         src = ""
-    return hashlib.sha256(
-        (q.oracle or "").encode() + b"\x00" + src.encode()
-    ).hexdigest()[:16]
+    parts = [(q.oracle or "").encode(), src.encode()]
+    module = getattr(q.fn, "__module__", None)
+    if module:
+        for name in _package_imports(module):
+            parts.append(name.encode())
+            parts.append(
+                inspect.getsource(importlib.import_module(name)).encode()
+            )
+    return hashlib.sha256(b"\x00".join(parts)).hexdigest()[:16]
 
 
 def compute_digests(spark, sf_dir: str) -> dict[str, dict]:
-    import inspect
-
     from data_management_python_spark.plans import collect_queries
 
     out: dict[str, dict] = {}
