@@ -11,8 +11,10 @@ Defaults chosen for correctness-vs-oracle and scale-out behavior:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
@@ -83,3 +85,30 @@ def operator_width(spark: SparkSession) -> int:
     except ValueError:  # e.g. "auto" on some deployments
         conf = cores
     return max(1, min(cores, conf))
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType
+) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order) as a LocalRelation.
+
+    ``spark.createDataFrame(list)`` plans a LogicalRDD over pickled
+    rows, so every action over it starts Python-worker tasks.  The rows
+    go to the JVM as one Arrow table instead, which Spark plans as a
+    LocalRelation below its Arrow local-relation threshold: Catalyst
+    folds projections and filters over it, and ``collect``/``first``
+    run in the driver without a job.  Same schema (nullability
+    included) and values as ``createDataFrame(rows, schema)``.
+    """
+    # imported here: pyarrow adds ~25 MB to the driver's resident set,
+    # which only callers that build frames from parsed files should pay
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -5,10 +5,10 @@ Format (public `interop_dumptext` output): sectioned CSV — lines
 (per-lane / per-cycle metric series).  Reference:
 igf_data/illumina/interop.py:4-41 (extract_data_from_interop_dump).
 
-One dump is small (MBs) -> parsed driver-side into one DataFrame per
-section; a directory of dumps from a fleet of sequencers can instead
-be read with ``spark.read.text`` + the same splitter per file via
-``input_file_name``.
+One dump is small (MBs) -> parsed driver-side into one LocalRelation
+frame per section (``session.local_frame``); a directory of dumps from
+a fleet of sequencers can instead be read with ``spark.read.text`` +
+the same splitter per file via ``input_file_name``.
 """
 
 from __future__ import annotations
@@ -18,6 +18,8 @@ import io
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
+
+from data_management_python_spark.session import local_frame
 
 
 def parse_interop_text(text: str) -> dict[str, tuple[list[str], list[list[str]]]]:
@@ -55,13 +57,13 @@ def parse_interop_text(text: str) -> dict[str, tuple[list[str], list[list[str]]]
 
 
 def read_interop_dump(spark: SparkSession, path: str) -> dict[str, DataFrame]:
-    """InterOp dump file -> one DataFrame per section (string columns;
-    callers cast metric columns as needed)."""
+    """InterOp dump file -> one LocalRelation per section (string
+    columns; callers cast metric columns as needed)."""
     with open(path, encoding="utf-8") as fh:
         sections = parse_interop_text(fh.read())
     out: dict[str, DataFrame] = {}
     for name, (header, rows) in sections.items():
         schema = StructType([StructField(h, StringType(), True) for h in header])
         padded = [tuple((r[i] if i < len(r) else None) for i in range(len(header))) for r in rows]
-        out[name] = spark.createDataFrame(padded, schema)
+        out[name] = local_frame(spark, padded, schema)
     return out

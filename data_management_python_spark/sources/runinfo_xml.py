@@ -7,8 +7,9 @@ chemistry parameters.  Reference parsers:
 igf_data/illumina/runinfo_xml.py:5-133 and runparameters_xml.py:3-108.
 
 KB-sized per-run files -> driver-side ElementTree, emitted as small
-DataFrames that broadcast-join against run-scale tables.  Also derives
-the bases-mask string (reference illumina/basesMask.py:5-99).
+LocalRelation frames (``session.local_frame``) that Catalyst evaluates
+in the driver and that broadcast-join against run-scale tables.  Also
+derives the bases-mask string (reference illumina/basesMask.py:5-99).
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from data_management_python_spark.session import local_frame
 
 READS_SCHEMA = StructType(
     [
@@ -47,7 +50,8 @@ RUN_SCHEMA = StructType(
 
 
 def read_runinfo(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
-    """RunInfo.xml -> (run_df [1 row], reads_df [1 row per read])."""
+    """RunInfo.xml -> (run_df [1 row], reads_df [1 row per read]), both
+    LocalRelations: ``first``/``collect`` on them fire no Spark job."""
     root = ET.parse(path).getroot()
     run = root.find("Run")
     if run is None:
@@ -80,14 +84,14 @@ def read_runinfo(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
         for r in run.iter("Read")
     ]
     return (
-        spark.createDataFrame([run_row], RUN_SCHEMA),
-        spark.createDataFrame(reads_rows, READS_SCHEMA),
+        local_frame(spark, [run_row], RUN_SCHEMA),
+        local_frame(spark, reads_rows, READS_SCHEMA),
     )
 
 
 def read_runparameters(spark: SparkSession, path: str) -> DataFrame:
-    """RunParameters.xml -> single-row DataFrame of scalar leaf params
-    (nested elements flattened with '/' paths)."""
+    """RunParameters.xml -> single-row LocalRelation of scalar leaf
+    params (nested elements flattened with '/' paths, then '_')."""
     root = ET.parse(path).getroot()
     flat: dict[str, str] = {}
 
@@ -102,7 +106,7 @@ def read_runparameters(spark: SparkSession, path: str) -> DataFrame:
         walk(c)
     cols = sorted(flat)
     schema = StructType([StructField(c.replace("/", "_"), StringType(), True) for c in cols])
-    return spark.createDataFrame([tuple(flat[c] for c in cols)], schema)
+    return local_frame(spark, [tuple(flat[c] for c in cols)], schema)
 
 
 def bases_mask(reads_df: DataFrame, index_lengths: list[int]) -> str:

@@ -6,8 +6,10 @@ with one row per (lane, sample, index).  Re-expresses the reference's
 SampleSheet class (igf_data/illumina/samplesheet.py:8-802: _read
 :781, _load_header :733, _load_data :750, v1/v2 detection :759-764)
 as a driver-side parse producing a Spark DataFrame — the file is KB
-sized; every downstream transform is a DataFrame op so samplesheet
-metadata joins against fleet-scale fact tables without collect.
+sized, so its rows become a LocalRelation (``session.local_frame``)
+that Catalyst evaluates in the driver; every downstream transform is a
+DataFrame op so samplesheet metadata joins against fleet-scale fact
+tables without collect.
 
 All columns are strings (reference keeps raw CSV strings).
 """
@@ -27,6 +29,7 @@ from data_management_python_spark.functions import (
     rev_comp,
     strip_project_user_suffix,
 )
+from data_management_python_spark.session import local_frame
 
 DATA_SECTIONS = ("Data", "BCLConvert_Data")
 
@@ -84,7 +87,8 @@ def read_samplesheet(spark: SparkSession, path: str) -> DataFrame:
       - Description uppercased, ':'->'-' (samplesheet.py:390-392)
       - 'Index'/'Index2' header spellings canonicalized to
         'index'/'index2' (reference matches case-insensitively)
-    Adds ``sheet_version`` ('v1'/'v2') as a constant column.
+    Adds ``sheet_version`` ('v1'/'v2') as a constant column.  The
+    frame is a LocalRelation, so collecting it fires no Spark job.
     """
     with open(path, encoding="utf-8") as fh:
         _, data, version = parse_samplesheet_text(fh.read())
@@ -99,8 +103,8 @@ def read_samplesheet(spark: SparkSession, path: str) -> DataFrame:
         data = [{rename.get(k, k): v for k, v in row.items()} for row in data]
     cols = list(data[0].keys())
     schema = StructType([StructField(c, StringType(), True) for c in cols])
-    df = spark.createDataFrame(
-        [tuple(row.get(c, "") for c in cols) for row in data], schema
+    df = local_frame(
+        spark, [tuple(row.get(c, "") for c in cols) for row in data], schema
     ).withColumn("sheet_version", F.lit(version))
     if "Sample_Project" in cols:
         df = df.withColumn(

@@ -65,6 +65,7 @@ import warnings
 from collections import Counter
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -4586,11 +4587,13 @@ class TableStore:
         # plans/hashes/anti-joins.  Journal ops are mutex-guarded; the
         # thread is always joined before this txn body returns, so the
         # commit point still covers both writes.  On a cluster this is
-        # plain multi-job scheduling inside one application.
+        # plain multi-job scheduling inside one application.  The worker
+        # thread's jobs keep the caller's job group and tags.
         from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
 
+        append = inheritable_thread_target(self.spark)(self.store_records)
         with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(self.store_records, name, main, validate)
+            fut = pool.submit(append, name, main, validate)
             try:
                 ret = self._store_attributes_side(name, eav, key_column)
             except BaseException:

@@ -17,13 +17,28 @@ Spark-first re-expression:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
+from data_management_python_spark import fsio
 from data_management_python_spark.operators.joins import anti_join
+from data_management_python_spark.session import local_frame
 
 COMPLETION_MARKER = "RTAComplete.txt"
+
+#: ``scheme://authority`` — what a walked ``scheme://`` path carries
+#: ahead of its path component
+_URI_PREFIX = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*")
+
+RUN_DIR_SCHEMA = StructType(
+    [
+        StructField("seqrun_igf_id", StringType(), True),
+        StructField("run_path", StringType(), True),
+    ]
+)
 
 
 def list_run_dirs(spark: SparkSession, root: str, marker: str = COMPLETION_MARKER) -> DataFrame:
@@ -33,26 +48,30 @@ def list_run_dirs(spark: SparkSession, root: str, marker: str = COMPLETION_MARKE
     check_finished_seqrun_dir, find_and_process_new_seqrun.py:148-185)
     — the file-arrival watermark of the batch world.
 
-    Listing goes through the Hadoop FileSystem API, NOT a Spark file
-    source: Spark's binaryFile/text sources silently skip zero-byte
-    files, and NovaSeq RTA3 writes an EMPTY RTAComplete.txt.  The FS
-    API sees every path and works on HDFS/S3/local alike; run-root
-    listing is a control-plane operation (thousands of dirs, not data
-    volume), so a driver-side walk is the right cost model.
+    Listing is a filesystem walk, NOT a Spark file source: Spark's
+    binaryFile/text sources silently skip zero-byte files, and NovaSeq
+    RTA3 writes an EMPTY RTAComplete.txt; Spark's file index also hides
+    ``_``/``.``-prefixed names.  The walk is the store's own
+    :func:`fsio.open_fs` dispatch — ``os.walk`` for a plain path, one
+    Hadoop ``listStatus`` per directory for a ``scheme://`` root — so a
+    local root costs no JVM round trip per file.  Every call lists
+    afresh (a marker written since the last call is found), and a
+    missing root raises ``FileNotFoundError``.
+
+    ``run_path`` is the URI path component of the run directory (a
+    plain relative root is made absolute).  The result is a
+    LocalRelation: run-root listing is control-plane data, evaluated
+    in the driver.
     """
-    jvm = spark._jvm
-    hadoop_conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = jpath.getFileSystem(hadoop_conf)
+    fs = fsio.open_fs(spark, root)
+    if not fs.isdir(root):
+        raise FileNotFoundError(root)
     found: list[tuple[str, str]] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath()
-        if p.getName() == marker:
-            run_path = p.getParent().toUri().getPath()
-            found.append((run_path.rstrip("/").rsplit("/", 1)[-1], run_path))
-    return spark.createDataFrame(found, "seqrun_igf_id string, run_path string")
+    for dirpath, _, files in fs.walk(root):
+        if marker in files:
+            run_path = os.path.abspath(_URI_PREFIX.sub("", dirpath))
+            found.append((os.path.basename(run_path), run_path))
+    return local_frame(spark, sorted(found), RUN_DIR_SCHEMA)
 
 
 def discover_new_runs(
@@ -119,7 +138,7 @@ def stream_new_run_markers(
     marker (NovaSeq RTA3 writes one) is invisible to this stream —
     it is neither emitted nor checkpoint-consumed.  For instruments
     with empty markers use the batch path (``discover_new_runs``,
-    which lists through the Hadoop FS API) on a schedule; this
+    which walks the filesystem itself) on a schedule; this
     streaming flavor is correct for markers with content."""
     stream = (
         spark.readStream.format("binaryFile")

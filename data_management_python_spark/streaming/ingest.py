@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -448,9 +449,11 @@ def span_monitor_batch(
 
     import concurrent.futures as _cf  # noqa: PLC0415
 
+    # the worker threads' jobs keep the caller's job group and tags
+    inherit = inheritable_thread_target(store.spark)
     with _cf.ThreadPoolExecutor(2) as ex:
-        f_pairs = ex.submit(_probe)
-        f_merge = ex.submit(_merge)
+        f_pairs = ex.submit(inherit(_probe))
+        f_merge = ex.submit(inherit(_merge))
         pairs = f_pairs.result()
         merged_summary = f_merge.result()
     # batch grams within the merged cap — batch-bounded, so both the
@@ -485,7 +488,7 @@ def span_monitor_batch(
         )
         with _cf.ThreadPoolExecutor(4) as ex:
             futs = [
-                ex.submit(verb, t, df, validate=False)
+                ex.submit(inherit(verb), t, df, validate=False)
                 for verb, t, df in writes
             ]
             for f in futs:

@@ -17,8 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import StringType, StructField, StructType
 
 from data_management_python_spark.operators.aggregates import duplicate_rows
+from data_management_python_spark.session import local_frame
 
 # Representative (library_source, library_strategy, experiment_type)
 # compatibility triples — ENA vocabulary, same role as the reference's
@@ -41,13 +43,14 @@ LIBRARY_COMPATIBILITY: list[tuple[str, str, str]] = [
 ]
 
 _COMPAT_COLS = ["library_source", "library_strategy", "experiment_type"]
+_COMPAT_SCHEMA = StructType(
+    [StructField(c, StringType(), True) for c in _COMPAT_COLS]
+)
 
 
 def compatibility_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        LIBRARY_COMPATIBILITY,
-        "library_source string, library_strategy string, experiment_type string",
-    )
+    """The compatibility triples as a LocalRelation."""
+    return local_frame(spark, LIBRARY_COMPATIBILITY, _COMPAT_SCHEMA)
 
 
 def invalid_library_combinations(metadata: DataFrame) -> DataFrame:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 from pathlib import Path
@@ -59,3 +60,40 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(call) -> (in_group, fired, result)``: ``call`` runs
+    under a fresh job group; ``in_group`` counts the jobs that carried
+    that group, ``fired`` every job Spark started meanwhile, on any
+    thread and in any group (the job ids between two fence jobs)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+
+    def group() -> str:
+        tag = f"spark-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(tag, tag)
+        return tag
+
+    def fence() -> int:
+        tag = group()
+        sc.parallelize([0], 1).count()
+        bus.waitUntilEmpty()
+        return tracker.getJobIdsForGroup(tag)[0]
+
+    def run(call):
+        first = fence()
+        tag = group()
+        try:
+            out = call()
+        finally:
+            last = fence()
+            sc.setJobGroup("", "")
+        return len(tracker.getJobIdsForGroup(tag)), last - first - 1, out
+
+    return run

@@ -78,6 +78,25 @@ def test_store_with_attributes_and_fk(store, spark):
     assert by_id[ids[1]].batch is None
 
 
+def test_store_with_attributes_jobs_carry_callers_job_group(
+    store, spark, spark_jobs
+):
+    """The main-table append runs on a worker thread; its jobs belong
+    to the caller's job group like the rest of the verb's."""
+    wide = spark.createDataFrame(
+        [(1, "IGFQ0001", "96", "batch7"), (2, "IGFQ0002", "48", None)],
+        "project_id long, project_igf_id string, expected_read string, "
+        "batch string",
+    )
+    in_group, fired, _ = spark_jobs(
+        lambda: store.store_with_attributes(
+            "project", wide, key_column="project_id"
+        )
+    )
+    assert in_group == fired > 0
+    assert store.table("project").count() == 2
+
+
 def test_upsert_and_delete(store, spark):
     pipelines = spark.createDataFrame(
         [(1, "demult", None, None, None, "AIRFLOW", "Y", None)],
